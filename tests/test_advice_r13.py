@@ -135,22 +135,37 @@ def test_write_time_ordered_multi_file_slices_get_distinct_mtimes(spark, tmp_pat
     import datetime as dt
     import glob
 
+    from pyspark.sql import functions as F
+
     from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import (
+        _deliver,
         _write_time_ordered,
     )
 
     base = dt.datetime(2024, 1, 1)
     rows = [(base + dt.timedelta(hours=i), "t", float(i)) for i in range(50)]
     ev = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
-    path = str(tmp_path / "deliver")
-    _write_time_ordered(ev, path, n=3)
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    assert len(files) >= 3
-    mtimes = [os.stat(f).st_mtime_ns for f in files]
-    assert len(set(mtimes)) == len(mtimes), mtimes
-    assert mtimes == sorted(mtimes)
-    total = sum(spark.read.parquet(f).count() for f in files)
-    assert total == 50
+    for writer in ("write_time_ordered", "deliver"):
+        path = str(tmp_path / writer)
+        if writer == "write_time_ordered":
+            _write_time_ordered(ev, path, n=3)
+        else:
+            # _deliver: one file per frame, in frame order — also across
+            # calls into the same dir (a planted redelivery arrives last)
+            frames = [ev.filter(F.floor(F.col("value") / 17) == k) for k in range(3)]
+            _deliver(frames[:2], path)
+            _deliver(frames[2:], path)
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        assert len(files) >= 3
+        mtimes = [os.stat(f).st_mtime_ns for f in files]
+        assert len(set(mtimes)) == len(mtimes), mtimes
+        assert mtimes == sorted(mtimes)
+        counts = [spark.read.parquet(f).count() for f in files]
+        assert sum(counts) == 50
+        if writer == "deliver":
+            assert counts == [17, 17, 16], counts
+            firsts = [spark.read.parquet(f).agg(F.min("value")).first()[0] for f in files]
+            assert firsts == [0.0, 17.0, 34.0], firsts
 
 
 # ---------------------------------------- 3b. pass-1 collect loud bound

@@ -28,6 +28,7 @@ from public_transit_status_with_apache_kafka_spark.sources.avro_codec import (
     encode_record,
     strip_confluent_frame,
 )
+from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import _await_drained
 
 ARRIVAL_SCHEMA = json.dumps(
     {
@@ -135,7 +136,7 @@ def test_stream_resume_consumes_appends_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
 
     drain()
     first = spark.read.parquet(out).collect()
@@ -205,7 +206,7 @@ def test_stream_starting_offsets_latest_sees_only_new(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
 
     run()
     assert got == []  # nothing before the start position
@@ -258,7 +259,7 @@ def test_produce_transform_produce_consume_chain(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     out = (
         spark.read.format("kafkasim")
         .option("subscribe", "station.arrivals.out")
@@ -746,7 +747,7 @@ def test_sink_streaming_end_to_end_chain(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     got = (
         spark.read.format("kafkasim").option("subscribe", "chain.out").load(log).collect()
     )

@@ -90,3 +90,57 @@ def test_no_cartesian_row_udf_or_unpartitioned_window_in_any_plan(spark):
         f"per-table scan budget ({MAX_SCANS_PER_TABLE}) exceeded — "
         f"localCheckpoint the shared frame: {rescans}"
     )
+
+
+def _broad_handlers(tree):
+    """(query, line) for every bare ``except`` / ``except Exception`` /
+    ``except BaseException`` inside a registered query, nested
+    functions included."""
+    import ast
+
+    broad = {"Exception", "BaseException"}
+
+    def is_broad(t):
+        if t is None:
+            return True
+        if isinstance(t, ast.Tuple):
+            return any(is_broad(e) for e in t.elts)
+        return isinstance(t, ast.Name) and t.id in broad
+
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef) or not any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "_register"
+            for d in fn.decorator_list
+        ):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.ExceptHandler) and is_broad(node.type):
+                yield fn.name, node.lineno
+
+
+def test_no_broad_except_in_stream_query_bodies():
+    """A foreachBatch body that catches any error and carries on with an
+    empty frame turns a failed state read (IO error, schema drift) into
+    silently wrong state. Stream queries create their empty state
+    explicitly before the stream starts and let every error surface.
+    Parse-only: starts no Spark."""
+    import ast
+    from pathlib import Path
+
+    plans = Path(entry.__file__).parent / "public_transit_status_with_apache_kafka_spark" / "plans"
+    found = []
+    for mod in ("streaming_queries.py", "search_queries.py"):
+        tree = ast.parse((plans / mod).read_text())
+        found += [(mod, q, ln) for q, ln in _broad_handlers(tree)]
+    assert not found, f"broad except in a registered query body: {found}"
+    # the check itself bites: a planted fallback is found
+    planted = ast.parse(
+        "@_register('q')\n"
+        "def q(spark, sf):\n"
+        "    def ingest(bdf, eid):\n"
+        "        try:\n"
+        "            pass\n"
+        "        except Exception:\n"
+        "            pass\n"
+    )
+    assert list(_broad_handlers(planted)) == [("q", 6)]

@@ -13,6 +13,7 @@ from public_transit_status_with_apache_kafka_spark.streaming import views as sv
 from public_transit_status_with_apache_kafka_spark.streaming.render import (
     render_dashboard,
 )
+from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import _await_drained
 
 
 def test_checkpoint_restart_no_double_count(spark, tmp_path):
@@ -40,7 +41,7 @@ def test_checkpoint_restart_no_double_count(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
 
     half_a = t.filter(F.col("station_id") < 100)
     half_b = t.filter(F.col("station_id") >= 100)

@@ -15,6 +15,10 @@ from public_transit_status_with_apache_kafka_spark import generator
 from public_transit_status_with_apache_kafka_spark.operators import cta_views
 from public_transit_status_with_apache_kafka_spark.streaming import state as st
 from public_transit_status_with_apache_kafka_spark.streaming import views as sv
+from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import (
+    _await_drained,
+    _deliver,
+)
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +43,7 @@ def _drain(stream_df, name, mode="complete"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     return q
 
 
@@ -104,7 +108,7 @@ def test_stateful_tracker_converges_to_batch(spark, fx_dirs, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_drained(q, 180)
 
     batch = {
         (r.station_id, r.direction): (r.train_id, r.train_status)
@@ -165,7 +169,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     got = sorted(r.event_id for r in spark.table("dedup_stream").collect())
     assert got == [1, 2, 3]
 
@@ -459,8 +463,6 @@ def test_sliding_window_eviction_boundary_inclusive(spark, tmp_path):
     assert Spark emits that window. sf fixtures never exercise this
     boundary (their max ts is off the hour grid), so without this pin
     the <= vs < choice in the DuckDB oracle was untested (ADVICE r10)."""
-    import time as _time
-
     base = 1704067200  # 2024-01-01 00:00 UTC, exactly on the hour grid
     rows = [(1, base), (2, base + 1800), (3, base + 5400), (4, base + 14400)]
     df = spark.createDataFrame(rows, "event_id long, sec long").select(
@@ -468,9 +470,7 @@ def test_sliding_window_eviction_boundary_inclusive(spark, tmp_path):
     )
     data = str(tmp_path / "data")
     # two delivery files in event-time order with distinct mtimes
-    df.filter(F.col("event_id") <= 3).coalesce(1).write.mode("append").parquet(data)
-    _time.sleep(1.1)
-    df.filter(F.col("event_id") == 4).coalesce(1).write.mode("append").parquet(data)
+    _deliver([df.filter(F.col("event_id") <= 3), df.filter(F.col("event_id") == 4)], data)
 
     src = (
         spark.readStream.schema(df.schema)
@@ -495,7 +495,7 @@ def test_sliding_window_eviction_boundary_inclusive(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_drained(q, 180)
     got = {
         (r.w_start.isoformat(), r.w_end.isoformat()): r.n
         for r in spark.table("boundary_pin").collect()

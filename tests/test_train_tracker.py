@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 
 from public_transit_status_with_apache_kafka_spark.generator import ARRIVALS_SCHEMA
 from public_transit_status_with_apache_kafka_spark.operators.cta_views import train_positions
+from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import _await_drained
 
 
 def _arrivals(spark, rows):
@@ -369,7 +370,7 @@ def test_tracker_v2_stream_converges(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_drained(q, 180)
     batch = {
         (r.station_id, r.direction): (r.train_id, r.train_status)
         for r in train_positions(fx["arrivals"]).collect()

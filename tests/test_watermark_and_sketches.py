@@ -9,6 +9,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import _await_drained
+
 
 def test_windowed_agg_drops_data_later_than_watermark(spark, tmp_path):
     """Append-mode windowed aggregation with a 5-minute watermark: a
@@ -59,7 +61,7 @@ def test_windowed_agg_drops_data_later_than_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     emitted = [
         (r.w.start.minute, r.n, r.sum_v) for r in spark.table("wm_agg").collect()
     ]

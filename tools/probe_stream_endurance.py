@@ -57,10 +57,10 @@ def main() -> None:
         else "tools/probe_results/stream_endurance_r11.jsonl"
     )
     n_batches = int(sys.argv[3]) if len(sys.argv) > 3 else 128
-    spark = get_spark("stream_endurance")
+    # the probe owns its session: 4 partitions for the whole run (the
+    # fixture-stream setting of plans/streaming_queries._replay)
+    spark = get_spark("stream_endurance", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     docs = docs.localCheckpoint()  # slice writes must not rescan parquet
@@ -185,7 +185,6 @@ def main() -> None:
             for rec in lines:
                 f.write(json.dumps(rec) + "\n")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -339,15 +339,12 @@ def main() -> None:
         else "tools/probe_results/stream_endurance_r12.jsonl"
     )
     n_batches = int(sys.argv[3]) if len(sys.argv) > 3 else 128
-    spark = get_spark("stream_endurance_r12")
+    # the probe owns its session: 4 partitions for the whole run (the
+    # fixture-stream setting of plans/streaming_queries._replay)
+    spark = get_spark("stream_endurance_r12", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        lines = run_markov(spark, sf_dir, n_batches)
-        lines += run_bitmap(spark, sf_dir, n_batches)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    lines = run_markov(spark, sf_dir, n_batches)
+    lines += run_bitmap(spark, sf_dir, n_batches)
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
     with open(out_path, "w") as f:
         for rec in lines:
